@@ -9,20 +9,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Engine {
 
-  /** Engine defaults, applied on top of any master/cores choice.
-    *
-    *  - non-ANSI: the reference's SAFE_CAST / pandas-coercion semantics
-    *    (reference runner.py:171, api.py:109-127) are permissive.
-    *  - AQE on: runtime coalescing + skew-join splitting is the 100 TB
-    *    answer to skewed keys (SURVEY.md §4).
-    *  - dynamic partition overwrite: the MERGE rewrite path
-    *    ([[operators.Upsert.applyToPartitionedParquet]]) must replace only
-    *    the partitions it touched.
-    *  - nanosAsLong: the fixture `events` table carries parquet
-    *    TIMESTAMP(NANOS), which Spark's reader otherwise rejects
-    *    (PARQUET_TYPE_ILLEGAL); we read the raw int64 and convert in
-    *    [[Tables.table]].
-    */
   /** Engine extensions: native codegen'd expressions registered as SQL
     * functions (callable via `call_function` / `expr` / plain SQL).
     */
@@ -163,12 +149,46 @@ object Engine {
         graft.functions.expressions.DeflateLen(children(0))))
   }
 
+  /** The engine's session builder: engine defaults, applied on top of
+    * the master/cores choice.
+    *
+    *  - non-ANSI: the reference's SAFE_CAST / pandas-coercion semantics
+    *    (reference runner.py:171, api.py:109-127) are permissive.
+    *  - AQE on: runtime coalescing + skew-join splitting is the 100 TB
+    *    answer to skewed keys (SURVEY.md §4).
+    *  - dynamic partition overwrite: the MERGE rewrite path
+    *    ([[operators.Upsert.applyToPartitionedParquet]]) must replace only
+    *    the partitions it touched.
+    *  - nanosAsLong: the fixture `events` table carries parquet
+    *    TIMESTAMP(NANOS), which Spark's reader otherwise rejects
+    *    (PARQUET_TYPE_ILLEGAL); we read the raw int64 and convert in
+    *    [[Tables.table]].
+    *  - codegen cache sized to the working set: one steady incremental
+    *    ETL cycle (customer + call + reporting refresh over two tenants)
+    *    compiles about 300 distinct generated classes (297-313 measured
+    *    per cycle with `CodegenMetrics`). Spark's default cache holds
+    *    100, so every cycle evicted the previous cycle's classes before
+    *    reusing them and recompiled all of them. 512 holds a cycle with
+    *    headroom; a larger cache only keeps more rarely reused classes
+    *    loaded, which costs resident memory. It is a static conf: it
+    *    takes effect only when this builder creates the JVM's first
+    *    session.
+    *
+    * `spark.master` contract: the `master` argument is only the LOCAL
+    * default. A `spark.master` JVM system property (what spark-submit
+    * `--master` sets) wins over it, so a cluster deployment is never
+    * silently turned into a driver-local run. A master set on the
+    * returned builder (`.master(...)`) wins over both: the last setting
+    * wins, and `Engine.local`/tests never set one. The flip side: any
+    * `-Dspark.master=...` that leaks into a JVM (a shell's `SBT_OPTS` or
+    * `JAVA_TOOL_OPTIONS`, a forked test JVM's options) also wins over
+    * `Engine.local(n)` — the test suite would then run against that
+    * master, with `n` shuffle partitions sized for a different core
+    * count. Test and bench JVMs must not carry the property.
+    */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder = {
     val b = SparkSession.builder()
-    // Respect an externally provided master (spark-submit --master sets
-    // the spark.master system property): the `master` argument is the
-    // LOCAL default, not an override — hard-setting it would silently
-    // turn a cluster deployment into a driver-local run.
+    // The `spark.master` contract above: an external master wins.
     if (!sys.props.contains("spark.master")) b.master(master)
     b
       .withExtensions(extensions)
@@ -199,6 +219,7 @@ object Engine {
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
         sys.env.getOrElse("SPARK_GRAFT_COMMITTER_ALGO", "1"))
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "512")
       // Managed-table warehouse (bucketed tables) outside the repo; a
       // cluster deployment overrides this to its real warehouse path.
       .config("spark.sql.warehouse.dir",

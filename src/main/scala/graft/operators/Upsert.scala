@@ -501,6 +501,43 @@ object Upsert {
       sourceOrder: Seq[Column] = Nil,
       updateCond: Option[String] = None,
       updateExprs: Map[String, String] = Map.empty): Unit =
+    rewritePartitions(spark, path, partitionCol, Seq(source)) { (target, srcs) =>
+      target match {
+        case Some(t) =>
+          upsert(t, srcs.head, keys, sourceOrder, updateCond, updateExprs)
+        case None if sourceOrder.isEmpty => srcs.head
+        case None =>
+          graft.functions.ColumnLib.latestWins(srcs.head, keys, sourceOrder)
+      }
+    }
+
+  /** The physical rewrite behind every partitioned MERGE:
+    * `merge(target, sources)` computes the new rows of the partitions the
+    * sources touch, and only those partitions are rewritten.
+    *
+    *  - No table yet (`target` = None): `merge`'s rows ARE the initial
+    *    table — partitioned parquet has no separate DDL step, the first
+    *    partitioned write declares the layout.
+    *  - Otherwise each source is materialized ONCE; the rewrite range
+    *    [min, max] of `partitionCol` over all sources and the merged rows
+    *    both come from that one evaluation (a source is often a whole
+    *    join+aggregate pipeline). `target` is the table pruned to that
+    *    range, so `merge` must only combine keys that include
+    *    `partitionCol`: then pruning cannot change which rows match.
+    *
+    * Several MERGEs into one table compose in memory inside one `merge`
+    * and cost one lock/read/write/swap round. Invariant, enforced inside
+    * the write plan: every output row lies in the range read — a row
+    * outside it (or with a null partition value) would replace a live
+    * partition this merge never read, so it fails the write with
+    * `raise_error` before anything is swapped.
+    */
+  private[graft] def rewritePartitions(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      partitionCol: String,
+      sources: Seq[DataFrame])(
+      merge: (Option[DataFrame], Seq[DataFrame]) => DataFrame): Unit =
     // The lock wraps recovery + bootstrap + merge + swap: every one of
     // those phases mutates the target root, so a second writer must be
     // excluded from ALL of them, not just the swap.
@@ -529,39 +566,36 @@ object Upsert {
         fs.delete(hBak, true)
       }
     }
-    // First-write bootstrap: a missing (or file-less) target means the
-    // deduped source IS the initial table — partitioned parquet has no
-    // separate DDL step, the first partitioned write declares the layout.
-    if (!graft.sources.Storage.exists(spark, path)) {
-      val init =
-        if (sourceOrder.isEmpty) source
-        else graft.functions.ColumnLib.latestWins(source, keys, sourceOrder)
-      init.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
-    } else mergeInto(spark, path, source, keys, partitionCol, sourceOrder,
-      updateCond, updateExprs)
+    if (!graft.sources.Storage.exists(spark, path))
+      merge(None, sources)
+        .write.mode("overwrite").partitionBy(partitionCol).parquet(path)
+    else mergeInto(spark, path, partitionCol, sources, merge)
   }
 
-  /** The merge + swap phases of [[applyToPartitionedParquet]], split out
-    * so the lock-wrapped public face stays `return`-free (a non-local
-    * return from inside the lock closure would ride an exception).
+  /** The merge + swap phases of [[rewritePartitions]], split out so the
+    * lock-wrapped body stays `return`-free (a non-local return from
+    * inside the lock closure would ride an exception).
     */
   private def mergeInto(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      source: DataFrame,
-      keys: Seq[String],
       partitionCol: String,
-      sourceOrder: Seq[Column],
-      updateCond: Option[String],
-      updateExprs: Map[String, String]): Unit = {
+      sources: Seq[DataFrame],
+      merge: (Option[DataFrame], Seq[DataFrame]) => DataFrame): Unit = {
     val hBak = new org.apache.hadoop.fs.Path(path + ".merge-bak")
-    val target = spark.read.parquet(path)
-    val range = source.agg(
-      min(col(partitionCol)).as("lo"), max(col(partitionCol)).as("hi")).head()
-    if (range.isNullAt(0)) return // empty source: nothing to merge
-    val prune = col(partitionCol).between(lit(range.get(0)), lit(range.get(1)))
-    val merged = upsert(target.filter(prune), source, keys,
-      sourceOrder, updateCond, updateExprs, targetPrune = None)
+    val srcs = sources.map(_.localCheckpoint(eager = true))
+    val range = srcs.map(_.select(col(partitionCol))).reduce(_.union(_))
+      .agg(min(col(partitionCol)), max(col(partitionCol))).head()
+    if (range.isNullAt(0)) return // empty sources: nothing to merge
+    val inRange = col(partitionCol).between(lit(range.get(0)), lit(range.get(1)))
+    // The rewrite-range invariant (see rewritePartitions), checked per
+    // output row inside the write plan.
+    val merged = merge(Some(spark.read.parquet(path).filter(inRange)), srcs)
+      .withColumn(partitionCol, when(inRange, col(partitionCol))
+        .otherwise(raise_error(concat(
+          lit(s"merge into $path: output row with $partitionCol="),
+          coalesce(col(partitionCol).cast("string"), lit("NULL")),
+          lit(s" outside the partitions read [${range.get(0)}, ${range.get(1)}]")))))
     // Write-to-temp + per-partition swap (same staging pattern as
     // [[graft.sources.Storage.compact]]): the merge streams from the
     // ORIGINAL files into a sibling temp dir, then each affected

@@ -55,13 +55,13 @@ final class BatchRunner(
       // warning at runner.py:95-104), never silently swallowed.
       if (res.hitResultWindowLimit)
         audit.add(tenant, "customer", 0, None, "RESULT_WINDOW_LIMIT")
-      if (res.docs.isEmpty) {
+      if (!res.hasDocs) {
         audit.add(tenant, "customer", 0, None, "NOOP"); None
       } else {
         val out = CallioIngest.customerTransform(res.docs, tenant)
-        val rows = Storage.loadAppend(out, p("stg_customer"))
-        val stats = out.agg(max(col("updateTime")),
-          min(col("NgayUpdate")), max(col("NgayUpdate"))).head()
+        val Storage.Appended(rows, stats) = Storage.loadAppend(out,
+          p("stg_customer"), stats = Seq(max(col("updateTime")),
+            min(col("NgayUpdate")), max(col("NgayUpdate"))))
         val maxUpdate = if (stats.isNullAt(0)) None else Some(stats.getLong(0))
         val window =
           if (stats.isNullAt(1) || stats.isNullAt(2)) None
@@ -120,14 +120,14 @@ final class BatchRunner(
         cfg.pageSize, cfg.limitRecords)
       if (res.hitResultWindowLimit)
         audit.add(tenant, "call_log", 0, None, "RESULT_WINDOW_LIMIT")
-      if (res.docs.isEmpty) audit.add(tenant, "call_log", 0, None, "NOOP")
+      if (!res.hasDocs) audit.add(tenant, "call_log", 0, None, "NOOP")
       else {
         val out = CallioIngest.callLogTransform(res.docs, tenant)
-        val rows = Storage.loadAppend(out, p("call_log"),
-          partitionCol = Some("NgayTao"), clusterBy = Seq("tenant"))
-        val maxCreate = out.agg(max(col("createTime"))).head().getLong(0)
-        checkpoints.advanceCheckpoint("call_log", tenant, maxCreate)
-        audit.add(tenant, "call_log", rows,
+        val appended = Storage.loadAppend(out, p("call_log"),
+          partitionCol = Some("NgayTao"), clusterBy = Seq("tenant"),
+          stats = Seq(max(col("createTime"))))
+        checkpoints.advanceCheckpoint("call_log", tenant, appended.stats.getLong(0))
+        audit.add(tenant, "call_log", appended.rows,
           checkpoints.getCheckpoint("call_log", tenant), "APPEND")
       }
     }
@@ -200,7 +200,7 @@ final class BatchRunner(
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val staff = CallioIngest.staffNameFilter(staffAll)
     if (!staff.isEmpty) {
-      val rows = Storage.loadAppend(staff, p("stg_staff"))
+      val rows = Storage.loadAppend(staff, p("stg_staff")).rows
       audit.add("ALL", "staff", rows, None, "STAGED")
       val staged = Storage.read(spark, p("stg_staff"))
       val merged =
@@ -225,8 +225,13 @@ final class BatchRunner(
     audit.flush()
   }
 
-  /** E3: the two physical MERGEs into the date-partitioned fact table
-    * over a trailing window ending today-VN7 (reference runner.py:589-595).
+  /** E3: the two MERGEs into the date-partitioned fact table over a
+    * trailing window ending today-VN7 (reference runner.py:589-595),
+    * composed in memory ([[FactStaffDaily.compose]]) and written as ONE
+    * partition rewrite. The rewrite reads the target pruned to the two
+    * sources' Ngay range; Ngay is a merge key, so that prune cannot
+    * change which rows match, and MERGE A keeps the physical path's
+    * semantics of no window prune (see DEVIATIONS.md).
     */
   def refreshReporting(dEnd: java.time.LocalDate,
       windowDays: Int = 7, tenant: String = "PK"): Unit = {
@@ -235,28 +240,18 @@ final class BatchRunner(
     val callLog = Storage.read(spark, p("call_log"))
     val customer = Storage.read(spark, p("customer"))
     val group = Storage.read(spark, p("group")).select("group_id", "name")
+    val fact = FactStaffDaily.factTemplate
     val srcA = conformTo(
-      FactStaffDaily.mergeASource(callLog, customer, group, lo, hi, tenant),
-      FactStaffDaily.factTemplate)
-    val aCols = Seq("Tenant", "Team", "MaNV", "TongCuoc", "SoSDT_Unique",
-      "SoCuoc_NoiMay", "SoCuoc_KhongNoiMay", "TongThoiluongGoi_Giay",
-      "TongRungChuong_Giay", "SoDataNhan", "max_create_ms", "max_assigned_ms")
-    Upsert.applyToPartitionedParquet(spark, p("fact_staff_daily"), srcA,
-      keys = Seq("Ngay", "MaNV_id"), partitionCol = "Ngay",
-      updateExprs = aCols.map(c => c -> s"s.$c").toMap)
+      FactStaffDaily.mergeASource(callLog, customer, group, lo, hi, tenant), fact)
     val srcB = conformTo(
-      FactStaffDaily.mergeBSource(callLog, customer, group, lo, hi, tenant),
-      FactStaffDaily.factTemplate)
-    Upsert.applyToPartitionedParquet(spark, p("fact_staff_daily"), srcB,
-      keys = Seq("Ngay", "MaNV_id"), partitionCol = "Ngay",
-      updateExprs = Map(
-        "Tenant" -> s"'$tenant'",
-        "Team" -> "coalesce(t.Team, s.Team)",
-        "MaNV" -> "coalesce(t.MaNV, s.MaNV)",
-        "SoSDT_KetBanZalo" -> "s.SoSDT_KetBanZalo",
-        "SoSDT_CoNhuCau" -> "s.SoSDT_CoNhuCau",
-        "SoSDT_TuChoi" -> "s.SoSDT_TuChoi",
-        "SoSDT_KhongNgheMay" -> "s.SoSDT_KhongNgheMay"))
+      FactStaffDaily.mergeBSource(callLog, customer, group, lo, hi, tenant), fact)
+    Upsert.rewritePartitions(spark, p("fact_staff_daily"), "Ngay",
+        Seq(srcA, srcB)) { (target, srcs) =>
+      val t = target.getOrElse(spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), fact))
+      FactStaffDaily.compose(conformTo(t, fact), srcs(0), srcs(1), tenant,
+        aPrune = None)
+    }
   }
 }
 

@@ -224,19 +224,28 @@ object FactStaffDaily {
     */
   def refresh(target: DataFrame, callLog: DataFrame, customer: DataFrame,
       group: DataFrame, dStart: Column, dEnd: Column,
-      tenant: String = "PK"): DataFrame = {
+      tenant: String = "PK"): DataFrame =
+    compose(conformTo(target, factTemplate),
+      conformTo(mergeASource(callLog, customer, group, dStart, dEnd, tenant), factTemplate),
+      conformTo(mergeBSource(callLog, customer, group, dStart, dEnd, tenant), factTemplate),
+      tenant, aPrune = Some(col("Ngay").between(dStart, dEnd)))
+
+  /** The MERGE spec, single-sourced: MERGE A of `srcA` into `target`,
+    * then MERGE B of `srcB` into the result, all three in [[factTemplate]]
+    * shape. `aPrune` is MERGE A's target range (the MERGE-ON predicate at
+    * runner.py:699-701): outside it, srcA rows insert instead of updating.
+    * [[graft.pipelines.BatchRunner.refreshReporting]] passes None (its
+    * target is already pruned to the sources' own Ngay range);
+    * [[refresh]] passes [dStart, dEnd] — DEVIATIONS.md records where the
+    * two differ.
+    */
+  def compose(target: DataFrame, srcA: DataFrame, srcB: DataFrame,
+      tenant: String, aPrune: Option[Column]): DataFrame = {
     val aCols = Seq("Tenant", "Team", "MaNV", "TongCuoc", "SoSDT_Unique",
       "SoCuoc_NoiMay", "SoCuoc_KhongNoiMay", "TongThoiluongGoi_Giay",
       "TongRungChuong_Giay", "SoDataNhan", "max_create_ms", "max_assigned_ms")
-    val srcA = conformTo(
-      mergeASource(callLog, customer, group, dStart, dEnd, tenant), factTemplate)
-    val afterA = Upsert.upsert(
-      conformTo(target, factTemplate), srcA, keys = Seq("Ngay", "MaNV_id"),
-      updateExprs = aCols.map(c => c -> s"s.$c").toMap,
-      targetPrune = Some(col("Ngay").between(dStart, dEnd)))
-
-    val srcB = conformTo(
-      mergeBSource(callLog, customer, group, dStart, dEnd, tenant), factTemplate)
+    val afterA = Upsert.upsert(target, srcA, keys = Seq("Ngay", "MaNV_id"),
+      updateExprs = aCols.map(c => c -> s"s.$c").toMap, targetPrune = aPrune)
     // NO targetPrune on MERGE B, deliberately: `Ngay` is a merge KEY and
     // every srcB row's Ngay lies inside [dStart, dEnd] by construction
     // (mergeBSource derives it from the range-filtered NgayTao), so an

@@ -86,7 +86,12 @@ object PagedSource {
 
   final case class FetchedDoc(sliceIdx: Int, page: Int, pos: Int, doc: String)
 
-  final case class FetchResult(docs: DataFrame, hitResultWindowLimit: Boolean)
+  /** `hasDocs`: at least one doc survived the cutoff, so `docs` is
+    * non-empty unless `limitRecords` is 0 — known from the fetch itself,
+    * without running the dedup/parse/sort plan behind `docs`.
+    */
+  final case class FetchResult(docs: DataFrame, hitResultWindowLimit: Boolean,
+      hasDocs: Boolean)
 
   /** Plan [cutoff, now) into newest-first slices (api.py:219-230). */
   def planSlices(cutoffMs: Long, nowMs: Long, sliceMs: Long): Seq[(Long, Long)] = {
@@ -182,29 +187,33 @@ object PagedSource {
       maxPagesPerSlice: Int = 10000): FetchResult = {
     import spark.implicits._
     val slices = planSlices(cutoffMs, nowMs, sliceMs).zipWithIndex
-    // Each slice task emits its docs plus one marker row (page = -1)
-    // carrying the result-window flag, so a fully-dropped slice still
-    // reports that it hit the limit.
-    val fetched: Dataset[(FetchedDoc, Boolean)] = spark
+    // Two flags ride the fetch itself as accumulators: did any slice hit
+    // the result-window limit (a fully-dropped slice included), and did
+    // any doc survive the cutoff. Flag semantics (read as > 0), so a
+    // retried task adding twice is harmless.
+    val hitAcc = spark.sparkContext.longAccumulator("paged.hitResultWindowLimit")
+    val docsAcc = spark.sparkContext.longAccumulator("paged.docs")
+    val fetched: Dataset[FetchedDoc] = spark
       .createDataset(slices)
       .repartition(math.max(1, slices.size))
       .flatMap { case ((from, to), idx) =>
         val (docs, hit) = fetchSlice(fetcher, entity, tenant, timeField,
           cutoffMs, (from, to), minSliceMs, pageSize, maxPagesPerSlice)
-        (FetchedDoc(idx, -1, -1, null), hit) +:
-          docs.map { case (pg, pos, d) => (FetchedDoc(idx, pg, pos, d), hit) }
+        if (hit) hitAcc.add(1)
+        if (docs.nonEmpty) docsAcc.add(1)
+        docs.map { case (pg, pos, d) => FetchedDoc(idx, pg, pos, d) }
       }
     // Materialize ONCE and cut lineage: every fetchPage call is a live
     // network request, so downstream actions (schema inference, dedup,
     // caller's own) must never re-trigger the fetch. localCheckpoint
     // blocks are released by the ContextCleaner when unreferenced —
-    // unlike cache(), repeated daemon-style runs don't accumulate.
+    // unlike cache(), repeated daemon-style runs don't accumulate. The
+    // accumulators are complete once this eager checkpoint returns.
     val materialized = fetched.localCheckpoint(true)
-    val hitLimit = materialized.filter(_._2).limit(1).count() > 0
 
     // First-occurrence-wins dedup (api.py:238-257): newest slice first,
     // then page order. Fallback dedup key mirrors `f"{ts}:{len}"`.
-    val tagged = materialized.filter(_._1.page >= 0).map(_._1).toDF()
+    val tagged = materialized.toDF()
       .withColumn("_dedup_key", coalesce(
         get_json_object(col("doc"), "$._id"),
         concat_ws(":", get_json_object(col("doc"), s"$$.$timeField"),
@@ -219,6 +228,7 @@ object PagedSource {
         parsed.orderBy(col(timeField).desc_nulls_last)
       else parsed
     val limited = limitRecords.map(sorted.limit).getOrElse(sorted)
-    FetchResult(limited, hitLimit)
+    FetchResult(limited, hitAcc.value > 0,
+      docsAcc.value > 0 && !limitRecords.contains(0))
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Parquet table storage layer (SURVEY.md §2.1 S9-S11): the engine's
@@ -20,30 +20,44 @@ import org.apache.spark.sql.functions.{col, count, lit}
   */
 object Storage {
 
+  /** What [[loadAppend]] observed while it wrote: the row count, and the
+    * caller's `stats` aggregates in the order given.
+    */
+  final case class Appended(rows: Long, stats: Row)
+
   /** Append with schema evolution: new columns are simply written; the
-    * union schema surfaces on [[read]] via mergeSchema. The row count is
-    * observed DURING the write (one pass) — a separate count() would
-    * evaluate the whole upstream transform pipeline twice.
+    * union schema surfaces on [[read]] via mergeSchema. The row count and
+    * any extra `stats` aggregates (e.g. `max(updateTime)` for a
+    * checkpoint) are observed DURING the write (one pass) — a separate
+    * count() or agg() afterwards would evaluate the whole upstream
+    * transform pipeline again.
     */
   def loadAppend(df: DataFrame, path: String,
       partitionCol: Option[String] = None,
-      clusterBy: Seq[String] = Nil): Long = {
+      clusterBy: Seq[String] = Nil,
+      stats: Seq[Column] = Nil): Appended = {
     val obs = org.apache.spark.sql.Observation()
-    val observed = df.observe(obs, count(lit(1)).as("n"))
+    val observed = df.observe(obs, count(lit(1)).as("__n"),
+      stats.zipWithIndex.map { case (c, i) => c.as(s"__stat$i") }: _*)
     val sorted =
       if (clusterBy.nonEmpty)
         observed.sortWithinPartitions(clusterBy.map(col): _*)
       else observed
     val w = sorted.write.mode("append")
     partitionCol.fold(w)(c => w.partitionBy(c)).parquet(path)
-    obs.get("n").asInstanceOf[Long]
+    val got = obs.get
+    Appended(got("__n").asInstanceOf[Long],
+      Row.fromSeq(stats.indices.map(i => got(s"__stat$i"))))
   }
 
-  /** Full overwrite (snapshot semantics). */
+  /** Full overwrite (snapshot semantics). The input is checkpointed
+    * first — it may read the table being overwritten — and the count
+    * comes from the checkpointed rows, so `df` is evaluated once.
+    */
   def loadTruncate(df: DataFrame, path: String): Long = {
-    val n = df.count()
-    df.localCheckpoint(eager = true) // tolerate overwriting our own input
-      .write.mode("overwrite").parquet(path)
+    val rows = df.localCheckpoint(eager = true)
+    val n = rows.count()
+    rows.write.mode("overwrite").parquet(path)
     n
   }
 

@@ -53,8 +53,8 @@ object PagedStream {
     val res = PagedSource.fetchDescUntil(spark, fetcher, entity, tenant,
       timeField, cutoffMs, nowMs, sliceMs, minSliceMs, pageSize, limitRecords)
     val staged =
-      if (res.docs.isEmpty) 0L
-      else Storage.loadAppend(transform(res.docs), spoolDir)
+      if (!res.hasDocs) 0L
+      else Storage.loadAppend(transform(res.docs), spoolDir).rows
     if (Storage.exists(spark, spoolDir)) {
       // Schema from the spool itself (not this tick's frame): the
       // stream may also be draining files a crashed prior tick left

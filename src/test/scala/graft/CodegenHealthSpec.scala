@@ -296,4 +296,40 @@ class CodegenHealthSpec extends SparkSpec {
     }
     assertNoCodegenFallback(warnings)
   }
+
+  test("a repeated ETL cycle compiles almost nothing: the codegen cache holds a cycle") {
+    // An undersized codegen cache (Spark's default holds 100 classes), or
+    // a literal that changes per cycle, makes every cycle recompile its
+    // generated classes. Cold run, one steady cycle, then the same
+    // steady cycle again at the same slot: the repeat must hit the cache.
+    import graft.pipelines.BatchRunner
+    import graft.sources.FixtureSources
+    val t0 = 1704844800000L
+    val wh = java.nio.file.Files.createTempDirectory("codegen_reuse").toString
+    val cfg = BatchRunner.Config(wh, tenants = Seq("PK"), sliceMs = 1800000L, pageSize = 13)
+    def runner(n: Int, version: Int) = {
+      val r = new BatchRunner(spark, new FixtureSources.Paged(t0, n, version),
+        new FixtureSources.Snapshots, cfg)
+      r.bootstrap()
+      r
+    }
+    def compiles =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def cycle(r: BatchRunner, now: Long): Long = {
+      val before = compiles
+      r.runCustomer(now)
+      r.runCall(now)
+      r.refreshReporting(java.time.LocalDate.parse("2024-01-10"))
+      compiles - before
+    }
+    val cold = runner(120, 1)
+    cold.runStaffGroup()
+    cycle(cold, t0 + 120 * 60000L)
+    val steady = runner(180, 2)
+    val now = t0 + 180 * 60000L
+    val first = cycle(steady, now)
+    val repeat = cycle(steady, now)
+    assert(repeat <= 5,
+      s"the repeated cycle compiled $repeat classes (the first one $first)")
+  }
 }
