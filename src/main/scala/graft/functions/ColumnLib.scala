@@ -194,6 +194,17 @@ object ColumnLib {
       val fut = Future(f); () => Await.result(fut, Duration.Inf)
     }
 
+  /** Await two [[fork]] handles, BOTH before surfacing a failure, then
+    * rethrow the first one in argument order. Awaiting them one after
+    * the other would throw out of the first while the second subtree's
+    * jobs are still running after the caller has returned.
+    */
+  def awaitBoth[A, B](a: () => A, b: () => B): (A, B) = {
+    val ra = scala.util.Try(a())
+    val rb = scala.util.Try(b())
+    (ra.get, rb.get)
+  }
+
   /** Keep the first row per key under `ordering` (descending-first wins).
     * `ordering` must be a total order within each key group for
     * deterministic output; callers append a unique tiebreaker.

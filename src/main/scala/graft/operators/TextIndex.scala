@@ -211,12 +211,11 @@ object TextIndex {
     // The postings and doclen sidecar writes are independent sinks over
     // the shared tokenize stream — overlap them (guide §2.6, gated
     // fork); the ledger row stays LAST (it is the commit point).
-    val cF = graft.functions.ColumnLib.fork(docs.sparkSession)(
-      writePostings(postings, "build", nShards, path, overwrite = true))
-    val dF = graft.functions.ColumnLib.fork(docs.sparkSession)(
-      writeDoclens(doclens, "build", path, overwrite = true))
-    dF()
-    val counts = cF()
+    val (counts, _) = graft.functions.ColumnLib.awaitBoth(
+      graft.functions.ColumnLib.fork(docs.sparkSession)(
+        writePostings(postings, "build", nShards, path, overwrite = true)),
+      graft.functions.ColumnLib.fork(docs.sparkSession)(
+        writeDoclens(doclens, "build", path, overwrite = true)))
     // nShards rides in the ledger: serving and appends MUST hash with
     // the build's shard count — a mismatch would silently prune live
     // postings. A rebuild overwrites the ledger = resets the baseline.
@@ -250,13 +249,12 @@ object TextIndex {
         s"dbucket=*/batch=$batch")
       val (postings, doclens, stats) = tokenize(docs, id, body)
       // Independent sinks, overlapped as in [[write]]; ledger row last.
-      val cF = graft.functions.ColumnLib.fork(spark)(
-        writePostings(postings, batch, meta.nShards, path,
-          overwrite = false))
-      val dF = graft.functions.ColumnLib.fork(spark)(
-        writeDoclens(doclens, batch, path, overwrite = false))
-      dF()
-      val counts = cF()
+      val (counts, _) = graft.functions.ColumnLib.awaitBoth(
+        graft.functions.ColumnLib.fork(spark)(
+          writePostings(postings, batch, meta.nShards, path,
+            overwrite = false)),
+        graft.functions.ColumnLib.fork(spark)(
+          writeDoclens(doclens, batch, path, overwrite = false)))
       // COMMIT POINT: the batch exists once this row is durable.
       writeMetaRow(spark, counts, stats, batch, meta.nShards, path,
         overwrite = false)

@@ -4,7 +4,7 @@ import graft.functions.ColumnLib._
 import graft.incremental.{CheckpointStore, Scheduler, UpdateLogBuffer}
 import graft.operators.Upsert
 import graft.sources.{PagedSource, Storage}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** End-to-end batch orchestration — the reference's job runners
@@ -16,6 +16,10 @@ import org.apache.spark.sql.functions._
   *   checkpoint → cutoff arithmetic → [[PagedSource]] fetch →
   *   [[CallioIngest]] transform → stage/append ([[Storage]]) →
   *   window merge ([[Upsert]]) → checkpoint commit → audit rows.
+  * Each entity takes ONE pass for all tenants (SURVEY.md §3 E1: one
+  * frame per tenant, unioned) — one fetch plan and one append — while
+  * checkpoints and audit rows stay per tenant. A fetch or append failure
+  * therefore fails the whole entity batch (see DEVIATIONS.md).
   *
   * Commit ordering follows the reference exactly (SURVEY.md §2.9 I4):
   * the customer checkpoint advances only after the MERGE succeeds
@@ -40,43 +44,75 @@ final class BatchRunner(
     */
   def bootstrap(): Unit = checkpoints.warm()
 
-  /** E1: incremental customer pull + windowed MERGE for all tenants
-    * (reference runner.py:523-563 + 55-146 + 148-210).
+  /** One pass over all tenants of an entity: fetch every tenant in one
+    * plan ([[PagedSource.fetchTenants]]), audit each tenant's
+    * result-window flag and NOOP, and stage the tenants with docs as ONE
+    * append of the unioned transforms. Per-tenant figures come from that
+    * append's one Observation as conditional aggregates. Returns
+    * (tenant, rows, `stats` in order) for each tenant with docs.
     */
-  def runCustomer(nowMs: Long): Unit = {
-    val staged = cfg.tenants.flatMap { tenant =>
-      val ck = checkpoints.getCheckpoint("customer", tenant)
-      val cutoff = Scheduler.cutoffMs(ck, nowMs, cfg.overlapMs, cfg.daysIfEmpty)
-      val res = PagedSource.fetchDescUntil(spark, fetcher, "customer", tenant,
-        "updateTime", cutoff, nowMs, cfg.sliceMs, cfg.minSliceMs,
-        cfg.pageSize, cfg.limitRecords)
+  private def ingest(entity: String, table: String, timeField: String,
+      overlapMs: Long, nowMs: Long, transform: (DataFrame, String) => DataFrame,
+      path: String, partitionCol: Option[String], clusterBy: Seq[String],
+      stats: Seq[String => Column]): Seq[(String, Long, Row)] = {
+    val cutoffs = cfg.tenants.map { tenant =>
+      tenant -> Scheduler.cutoffMs(checkpoints.getCheckpoint(table, tenant),
+        nowMs, overlapMs, cfg.daysIfEmpty)
+    }
+    val fetched = PagedSource.fetchTenants(spark, fetcher, entity, timeField,
+      cutoffs, nowMs, cfg.sliceMs, cfg.minSliceMs, cfg.pageSize, cfg.limitRecords)
+    val live = cfg.tenants.filter { tenant =>
+      val res = fetched(tenant)
       // The result-window flag means a refused slice may have been
       // dropped — an auditable data-loss signal (reference logs a
       // warning at runner.py:95-104), never silently swallowed.
       if (res.hitResultWindowLimit)
-        audit.add(tenant, "customer", 0, None, "RESULT_WINDOW_LIMIT")
-      if (!res.hasDocs) {
-        audit.add(tenant, "customer", 0, None, "NOOP"); None
-      } else {
-        val out = CallioIngest.customerTransform(res.docs, tenant)
-        val Storage.Appended(rows, stats) = Storage.loadAppend(out,
-          p("stg_customer"), stats = Seq(max(col("updateTime")),
-            min(col("NgayUpdate")), max(col("NgayUpdate"))))
-        val maxUpdate = if (stats.isNullAt(0)) None else Some(stats.getLong(0))
-        val window =
-          if (stats.isNullAt(1) || stats.isNullAt(2)) None
-          else Some((stats.getDate(1), stats.getDate(2)))
-        audit.add(tenant, "customer", rows, None, "STAGED")
-        Some((tenant, rows, maxUpdate, window))
+        audit.add(tenant, table, 0, None, "RESULT_WINDOW_LIMIT")
+      if (!res.hasDocs) audit.add(tenant, table, 0, None, "NOOP")
+      res.hasDocs
+    }
+    if (live.isEmpty) Nil
+    else {
+      val out = live.map(t => transform(fetched(t).docs, t)).reduce(_.unionByName(_))
+      val perTenant = (t: String) =>
+        count(when(col("tenant") === t, lit(1))) +: stats.map(_(t))
+      val got = Storage.loadAppend(out, path, partitionCol, clusterBy,
+        stats = live.flatMap(perTenant)).stats
+      val width = stats.size + 1
+      live.zipWithIndex.map { case (t, i) =>
+        (t, got.getLong(i * width),
+          Row.fromSeq((1 until width).map(k => got.get(i * width + k))))
       }
     }
-    val windows = staged.flatMap(_._4)
+  }
+
+  /** `f(c)` over the rows of `tenant` only — one tenant's aggregate in a
+    * multi-tenant Observation.
+    */
+  private def ofTenant(f: Column => Column, c: String)(tenant: String): Column =
+    f(when(col("tenant") === tenant, col(c)))
+
+  /** E1: incremental customer pull + windowed MERGE for all tenants
+    * (reference runner.py:523-563 + 55-146 + 148-210).
+    */
+  def runCustomer(nowMs: Long): Unit = {
+    val staged = ingest("customer", "customer", "updateTime", cfg.overlapMs,
+      nowMs, CallioIngest.customerTransform, p("stg_customer"), None, Nil,
+      Seq(ofTenant(max, "updateTime"), ofTenant(min, "NgayUpdate"),
+        ofTenant(max, "NgayUpdate")))
+    staged.foreach { case (tenant, rows, _) =>
+      audit.add(tenant, "customer", rows, None, "STAGED")
+    }
+    val windows = staged.collect { case (_, _, st) if !st.isNullAt(1) && !st.isNullAt(2) =>
+      (st.getDate(1), st.getDate(2))
+    }
     if (windows.nonEmpty) {
       val lo = windows.map(_._1).minBy(_.getTime)
       val hi = windows.map(_._2).maxBy(_.getTime)
       mergeCustomerWindow(lo, hi)
-      staged.foreach { case (tenant, rows, maxUpdate, _) =>
-        maxUpdate.foreach { mu =>
+      staged.foreach { case (tenant, rows, st) =>
+        if (!st.isNullAt(0)) {
+          val mu = st.getLong(0)
           checkpoints.setCheckpoint("customer", tenant, mu)
           audit.add(tenant, "customer", rows, Some(mu), "MERGED")
         }
@@ -112,24 +148,13 @@ final class BatchRunner(
     * overlap, direct append, forward-only checkpoint.
     */
   def runCall(nowMs: Long): Unit = {
-    cfg.tenants.foreach { tenant =>
-      val ck = checkpoints.getCheckpoint("call_log", tenant)
-      val cutoff = Scheduler.cutoffMs(ck, nowMs, overlapMs = 0L, cfg.daysIfEmpty)
-      val res = PagedSource.fetchDescUntil(spark, fetcher, "call", tenant,
-        "createTime", cutoff, nowMs, cfg.sliceMs, cfg.minSliceMs,
-        cfg.pageSize, cfg.limitRecords)
-      if (res.hitResultWindowLimit)
-        audit.add(tenant, "call_log", 0, None, "RESULT_WINDOW_LIMIT")
-      if (!res.hasDocs) audit.add(tenant, "call_log", 0, None, "NOOP")
-      else {
-        val out = CallioIngest.callLogTransform(res.docs, tenant)
-        val appended = Storage.loadAppend(out, p("call_log"),
-          partitionCol = Some("NgayTao"), clusterBy = Seq("tenant"),
-          stats = Seq(max(col("createTime"))))
-        checkpoints.advanceCheckpoint("call_log", tenant, appended.stats.getLong(0))
-        audit.add(tenant, "call_log", appended.rows,
-          checkpoints.getCheckpoint("call_log", tenant), "APPEND")
-      }
+    val appended = ingest("call", "call_log", "createTime", 0L, nowMs,
+      CallioIngest.callLogTransform, p("call_log"), Some("NgayTao"), Seq("tenant"),
+      Seq(ofTenant(max, "createTime")))
+    appended.foreach { case (tenant, rows, st) =>
+      if (!st.isNullAt(0)) checkpoints.advanceCheckpoint("call_log", tenant, st.getLong(0))
+      audit.add(tenant, "call_log", rows,
+        checkpoints.getCheckpoint("call_log", tenant), "APPEND")
     }
     audit.flush()
   }

@@ -1,14 +1,16 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Adaptive paged incremental source (SURVEY.md §2.1 S3-S6; reference
   * api.py:86-324). The reference fetches descending-time pages from a
   * REST endpoint, slice by slice, serially. Here the same protocol is a
-  * Spark batch source: the driver plans one task per time slice and
-  * executors fetch their slice's pages in parallel — the reference's
-  * serial loop parallelized by its own slice planner (api.py:219-230).
+  * Spark batch source: the driver plans one task per (tenant, time
+  * slice) and executors fetch their slice's pages in parallel — the
+  * reference's serial per-tenant loop (runner.py:529, 567) parallelized
+  * by its own slice planner (api.py:219-230), all tenants of an entity
+  * in one plan ([[fetchTenants]]).
   *
   * The transport is behind [[DocFetcher]] so tests (and this offline
   * container) inject fixture data; a production impl wraps
@@ -26,10 +28,11 @@ import org.apache.spark.sql.functions._
   *    unsplittable slice is dropped and surfaced via the
   *    `hit_result_window_limit` flag;
   *  - first-occurrence-wins dedup on `_id` across slices/pages
-  *    (api.py:231-257) — newest slice wins, preserved by ordering on
-  *    (slice, page, position);
-  *  - global sort by the time field descending + head-N
-  *    (api.py:311-313), which Spark executes as top-k.
+  *    (api.py:231-257), per tenant — newest slice wins, preserved by
+  *    ordering on (slice, page, position);
+  *  - sort by the time field descending + head-N (api.py:311-313),
+  *    which Spark executes as top-k; without a limit the sort only
+  *    matters to callers that want page order ([[fetchDescUntil]]).
   */
 object PagedSource {
 
@@ -84,11 +87,12 @@ object PagedSource {
     }
   }
 
-  final case class FetchedDoc(sliceIdx: Int, page: Int, pos: Int, doc: String)
+  final case class FetchedDoc(tenant: String, sliceIdx: Int, page: Int, pos: Int,
+      doc: String)
 
   /** `hasDocs`: at least one doc survived the cutoff, so `docs` is
     * non-empty unless `limitRecords` is 0 — known from the fetch itself,
-    * without running the dedup/parse/sort plan behind `docs`.
+    * without a job over `docs`.
     */
   final case class FetchResult(docs: DataFrame, hitResultWindowLimit: Boolean,
       hasDocs: Boolean)
@@ -177,58 +181,99 @@ object PagedSource {
     if (m.find()) m.group(1).toLong else 0L
   }
 
-  /** The full incremental fetch: slice plan → parallel slice tasks →
-    * first-wins `_id` dedup → JSON parse → desc sort + limit.
+  /** Per-tenant incremental fetch in ONE Spark plan (SURVEY.md §3 E1:
+    * one frame per tenant out of a shared scan). Every tenant's slices
+    * are planned on the driver and run as one task per (tenant, slice)
+    * — `parallelize` places the task list directly, no shuffle. The
+    * first-wins dedup runs per (tenant, key) BEFORE the one eager
+    * `localCheckpoint`, so fetch and dedup are evaluated once and no
+    * consumer re-runs either: every fetchPage call is a live network
+    * request, and localCheckpoint blocks are released by the
+    * ContextCleaner when unreferenced (unlike cache(), daemon-style
+    * runs don't accumulate).
+    *
+    * Each tenant's JSON schema is inferred over its own checkpointed
+    * docs (one job per tenant with docs), so one tenant's doc shapes
+    * never change another's columns or types; a tenant without docs gets
+    * an empty frame and no job. Docs come back UNORDERED unless
+    * `limitRecords` is set, which keeps the newest N per tenant (sort by
+    * the time field descending, then head-N — api.py:311-313, executed
+    * as top-k).
+    */
+  def fetchTenants(spark: SparkSession, fetcher: DocFetcher, entity: String,
+      timeField: String, cutoffs: Seq[(String, Long)], nowMs: Long,
+      sliceMs: Long = 86400000L, minSliceMs: Long = 3600000L,
+      pageSize: Int = 500, limitRecords: Option[Int] = None,
+      maxPagesPerSlice: Int = 10000): Map[String, FetchResult] = {
+    import spark.implicits._
+    require(cutoffs.map(_._1).distinct.size == cutoffs.size,
+      s"duplicate tenants in $cutoffs")
+    val tasks = cutoffs.zipWithIndex.flatMap { case ((_, cutoff), t) =>
+      planSlices(cutoff, nowMs, sliceMs).zipWithIndex.map { case (slice, idx) =>
+        (t, idx, cutoff, slice)
+      }
+    }
+    // Two flags per tenant ride the fetch itself as accumulators: did a
+    // slice hit the result-window limit (a fully-dropped slice included),
+    // and did any doc survive the cutoff. Flag semantics (read as > 0),
+    // so a retried task adding twice is harmless.
+    val hitAcc = cutoffs.map(c => spark.sparkContext.longAccumulator(
+      s"paged.hitResultWindowLimit.${c._1}"))
+    val docsAcc = cutoffs.map(c => spark.sparkContext.longAccumulator(
+      s"paged.docs.${c._1}"))
+    val tenants = cutoffs.map(_._1)
+    val fetched = spark.sparkContext
+      .parallelize(tasks, math.max(1, tasks.size))
+      .flatMap { case (t, idx, cutoff, slice) =>
+        val (docs, hit) = fetchSlice(fetcher, entity, tenants(t), timeField,
+          cutoff, slice, minSliceMs, pageSize, maxPagesPerSlice)
+        if (hit) hitAcc(t).add(1)
+        if (docs.nonEmpty) docsAcc(t).add(1)
+        docs.map { case (pg, pos, d) => FetchedDoc(tenants(t), idx, pg, pos, d) }
+      }
+    // First-occurrence-wins dedup (api.py:238-257) per tenant: newest
+    // slice first, then page order. Fallback key mirrors `f"{ts}:{len}"`.
+    val tagged = fetched.toDF()
+      .withColumn("_dedup_key", coalesce(
+        get_json_object(col("doc"), "$._id"),
+        concat_ws(":", get_json_object(col("doc"), s"$$.$timeField"),
+          length(col("doc")).cast("string"))))
+    val first = graft.functions.ColumnLib.latestWins(tagged,
+      keys = Seq("tenant", "_dedup_key"),
+      ordering = Seq(col("sliceIdx").asc, col("page").asc, col("pos").asc))
+    // The accumulators are complete once this eager checkpoint returns.
+    val materialized = first.select("tenant", "doc").localCheckpoint(true)
+
+    cutoffs.zipWithIndex.map { case ((tenant, _), t) =>
+      val hasDocs = docsAcc(t).value > 0
+      val docs =
+        if (!hasDocs) spark.emptyDataFrame
+        else {
+          val parsed = spark.read.json(
+            materialized.filter(col("tenant") === tenant).select("doc").as[String])
+          limitRecords.fold(parsed) { n =>
+            if (parsed.columns.contains(timeField))
+              parsed.orderBy(col(timeField).desc_nulls_last).limit(n)
+            else parsed.limit(n)
+          }
+        }
+      tenant -> FetchResult(docs, hitAcc(t).value > 0,
+        hasDocs && !limitRecords.contains(0))
+    }.toMap
+  }
+
+  /** One tenant's incremental fetch ([[fetchTenants]]) with its docs
+    * sorted by the time field descending — the reference's page order.
     */
   def fetchDescUntil(spark: SparkSession, fetcher: DocFetcher, entity: String,
       tenant: String, timeField: String, cutoffMs: Long, nowMs: Long,
       sliceMs: Long = 86400000L, minSliceMs: Long = 3600000L,
       pageSize: Int = 500, limitRecords: Option[Int] = None,
       maxPagesPerSlice: Int = 10000): FetchResult = {
-    import spark.implicits._
-    val slices = planSlices(cutoffMs, nowMs, sliceMs).zipWithIndex
-    // Two flags ride the fetch itself as accumulators: did any slice hit
-    // the result-window limit (a fully-dropped slice included), and did
-    // any doc survive the cutoff. Flag semantics (read as > 0), so a
-    // retried task adding twice is harmless.
-    val hitAcc = spark.sparkContext.longAccumulator("paged.hitResultWindowLimit")
-    val docsAcc = spark.sparkContext.longAccumulator("paged.docs")
-    val fetched: Dataset[FetchedDoc] = spark
-      .createDataset(slices)
-      .repartition(math.max(1, slices.size))
-      .flatMap { case ((from, to), idx) =>
-        val (docs, hit) = fetchSlice(fetcher, entity, tenant, timeField,
-          cutoffMs, (from, to), minSliceMs, pageSize, maxPagesPerSlice)
-        if (hit) hitAcc.add(1)
-        if (docs.nonEmpty) docsAcc.add(1)
-        docs.map { case (pg, pos, d) => FetchedDoc(idx, pg, pos, d) }
-      }
-    // Materialize ONCE and cut lineage: every fetchPage call is a live
-    // network request, so downstream actions (schema inference, dedup,
-    // caller's own) must never re-trigger the fetch. localCheckpoint
-    // blocks are released by the ContextCleaner when unreferenced —
-    // unlike cache(), repeated daemon-style runs don't accumulate. The
-    // accumulators are complete once this eager checkpoint returns.
-    val materialized = fetched.localCheckpoint(true)
-
-    // First-occurrence-wins dedup (api.py:238-257): newest slice first,
-    // then page order. Fallback dedup key mirrors `f"{ts}:{len}"`.
-    val tagged = materialized.toDF()
-      .withColumn("_dedup_key", coalesce(
-        get_json_object(col("doc"), "$._id"),
-        concat_ws(":", get_json_object(col("doc"), s"$$.$timeField"),
-          length(col("doc")).cast("string"))))
-    val first = graft.functions.ColumnLib.latestWins(tagged,
-      keys = Seq("_dedup_key"),
-      ordering = Seq(col("sliceIdx").asc, col("page").asc, col("pos").asc))
-
-    val parsed = spark.read.json(first.select("doc").as[String])
-    val sorted =
-      if (parsed.columns.contains(timeField))
-        parsed.orderBy(col(timeField).desc_nulls_last)
-      else parsed
-    val limited = limitRecords.map(sorted.limit).getOrElse(sorted)
-    FetchResult(limited, hitAcc.value > 0,
-      docsAcc.value > 0 && !limitRecords.contains(0))
+    val res = fetchTenants(spark, fetcher, entity, timeField,
+      Seq(tenant -> cutoffMs), nowMs, sliceMs, minSliceMs, pageSize,
+      limitRecords, maxPagesPerSlice)(tenant)
+    if (limitRecords.nonEmpty || !res.docs.columns.contains(timeField)) res
+    else res.copy(docs = res.docs.orderBy(col(timeField).desc_nulls_last))
   }
 }

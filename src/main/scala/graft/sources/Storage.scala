@@ -39,26 +39,33 @@ object Storage {
     val obs = org.apache.spark.sql.Observation()
     val observed = df.observe(obs, count(lit(1)).as("__n"),
       stats.zipWithIndex.map { case (c, i) => c.as(s"__stat$i") }: _*)
-    val sorted =
-      if (clusterBy.nonEmpty)
-        observed.sortWithinPartitions(clusterBy.map(col): _*)
-      else observed
-    val w = sorted.write.mode("append")
+    val w = clustered(observed, partitionCol, clusterBy).write.mode("append")
     partitionCol.fold(w)(c => w.partitionBy(c)).parquet(path)
     val got = obs.get
     Appended(got("__n").asInstanceOf[Long],
       Row.fromSeq(stats.indices.map(i => got(s"__stat$i"))))
   }
 
+  /** Sort each write task's rows for within-file key locality. A
+    * partitioned write must lead with the partition column: Spark's
+    * planned write sorts by the partition column alone unless the input
+    * is already ordered by it, and that sort would silently replace a
+    * `clusterBy`-only sort.
+    */
+  private def clustered(df: DataFrame, partitionCol: Option[String],
+      clusterBy: Seq[String]): DataFrame =
+    if (clusterBy.isEmpty) df
+    else df.sortWithinPartitions((partitionCol.toSeq ++ clusterBy).map(col): _*)
+
   /** Full overwrite (snapshot semantics). The input is checkpointed
-    * first — it may read the table being overwritten — and the count
-    * comes from the checkpointed rows, so `df` is evaluated once.
+    * first — it may read the table being overwritten — and the row
+    * count is observed during the write, so `df` is evaluated once.
     */
   def loadTruncate(df: DataFrame, path: String): Long = {
-    val rows = df.localCheckpoint(eager = true)
-    val n = rows.count()
-    rows.write.mode("overwrite").parquet(path)
-    n
+    val obs = org.apache.spark.sql.Observation()
+    df.localCheckpoint(eager = true).observe(obs, count(lit(1)).as("__n"))
+      .write.mode("overwrite").parquet(path)
+    obs.get("__n").asInstanceOf[Long]
   }
 
   /** Evolution-aware read: union schema across files. */
@@ -272,11 +279,7 @@ object Storage {
       clusterBy: Seq[String] = Nil): Unit = {
     require(columnarFormats(format),
       s"exportAs supports ${columnarFormats.mkString("/")}, got '$format'")
-    val sorted =
-      if (clusterBy.nonEmpty)
-        df.sortWithinPartitions(clusterBy.map(col): _*)
-      else df
-    val w = sorted.write.mode("overwrite").format(format)
+    val w = clustered(df, partitionCol, clusterBy).write.mode("overwrite").format(format)
     partitionCol.fold(w)(c => w.partitionBy(c)).save(path)
   }
 

@@ -29,6 +29,29 @@ class StorageSpec extends SparkSpec {
     assert(Storage.read(spark, dir).collect().map(_.getLong(0)).toSeq == Seq(2L))
   }
 
+  test("clusterBy survives a partitioned write: tenants sorted within every file") {
+    // Two tenants interleaved over three date partitions in ONE task, so
+    // every file sees both tenants unless the write sorts them.
+    val rows = spark.range(0, 3000).coalesce(1).select(
+      when(col("id") % 2 === 0, "PK").otherwise("HN").as("tenant"),
+      col("id"),
+      date_add(lit(java.sql.Date.valueOf("2024-01-01")), (col("id") % 3).cast("int")).as("d"))
+    def tenantsPerFile(dir: String): Seq[Seq[String]] =
+      Storage.read(spark, dir).inputFiles.toSeq.map { f =>
+        spark.read.parquet(f).select("tenant").collect().map(_.getString(0)).toSeq
+      }
+    val appended = java.nio.file.Files.createTempDirectory("cluster").toString + "/t"
+    Storage.loadAppend(rows, appended, partitionCol = Some("d"), clusterBy = Seq("tenant"))
+    val exported = java.nio.file.Files.createTempDirectory("cluster").toString + "/o"
+    Storage.exportAs(rows, exported, "parquet", partitionCol = Some("d"),
+      clusterBy = Seq("tenant"))
+    Seq(appended, exported).foreach { dir =>
+      val files = tenantsPerFile(dir)
+      assert(files.size == 3 && files.flatten.size == 3000)
+      files.foreach(ts => assert(ts == ts.sorted, s"tenant order lost in $dir"))
+    }
+  }
+
   test("bucketed tables join without any exchange") {
     val a = spark.range(0, 10000).selectExpr("id AS k", "id * 2 AS va")
     val b = spark.range(0, 10000).selectExpr("id AS k", "id * 3 AS vb")

@@ -392,6 +392,43 @@ class TextIndexSpec extends SparkSpec {
     assert(TextIndex.searchBM25(spark, path, Seq("spark"), 10).count() == 4)
   }
 
+  test("a failing sink throws only after the other sink's jobs are done") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val path = tmp("failing_sink")
+    TextIndex.write(corpus, "doc_id", "text", path, nShards = 4)
+    // A file where the doclens sidecar's directory belongs fails that
+    // sink as it starts, while the postings sink has a large batch to write.
+    val doclens = new java.io.File(path + "__doclens")
+    org.apache.commons.io.FileUtils.deleteDirectory(doclens)
+    java.nio.file.Files.writeString(doclens.toPath, "not a directory")
+    val batch = spark.range(100, 20100).select(col("id").as("doc_id"),
+      concat_ws(" ", transform(sequence(lit(1), lit(30)),
+        i => concat(lit("w"), ((col("id") * i) % 5000).cast("string")))).as("text"))
+    val sc = spark.sparkContext
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = events.add(e.time)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = events.add(e.time)
+    }
+    org.apache.spark.ListenerBusSync(sc)
+    sc.addSparkListener(listener)
+    try {
+      intercept[Exception] {
+        TextIndex.append(batch, "doc_id", "text", path, "b1")
+      }
+      val thrownAt = System.currentTimeMillis()
+      // A sink left running would start or finish jobs from here on.
+      Thread.sleep(500)
+      val deadline = thrownAt + 60000
+      while (sc.statusTracker.getActiveJobIds().nonEmpty &&
+          System.currentTimeMillis() < deadline) Thread.sleep(50)
+      org.apache.spark.ListenerBusSync(sc)
+      import scala.jdk.CollectionConverters._
+      assert(events.asScala.forall(_ <= thrownAt),
+        "a forked sink was still running after the call threw")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("two interleaved appends serialize on the lease and BOTH land") {
     val path = tmp("append_race")
     TextIndex.write(corpus, "doc_id", "text", path, nShards = 4)
